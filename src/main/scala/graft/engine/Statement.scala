@@ -1019,8 +1019,8 @@ object Statement {
     * BOUNDED RESULTS ONLY: this materializes the full result on the driver
     * via `collect()` — it exists for the CLI/tests/demo. The serving path
     * streams batches without driver materialization
-    * ([[graft.server.GraftHttpServer]] + `ArrowIO.write` over
-    * `toLocalIterator`); never put this method on a wire path.
+    * ([[graft.server.GraftHttpServer]] + `ArrowIO.writeArrowStream`, one
+    * partition at a time); never put this method on a wire path.
     */
   def run(
       sessions: SessionManager,

@@ -30,9 +30,10 @@ import scala.language.implicitConversions
   *  - GET  /healthz  200 SERVING / 503 NOT_SERVING (background prober)
   *  - POST /close    close the caller's session
   *
-  * Result bodies stream: both the Arrow and the JSON encodings write chunked
-  * through `toLocalIterator`, so a SELECT larger than driver memory never
-  * materializes on the driver (one batch resident at a time). With `tls`
+  * Result bodies stream chunked, so a SELECT larger than driver memory never
+  * materializes on the driver. Arrow results are encoded on the executors
+  * by Spark's `ArrowConverters` and fetched one partition at a time
+  * (`ArrowIO`); JSON rows go through `toLocalIterator`. With `tls`
   * set, the same endpoints serve HTTPS via the JDK's `HttpsServer` — the
   * reference's TLS listener (`gizmosql_library.cpp:497-560`, cert/key
   * material under `tls/`); a plaintext client against a TLS port is refused
@@ -384,13 +385,16 @@ final class GraftHttpServer(
       }
     }
 
-  /** Stream a result DataFrame chunked (Arrow IPC or a JSON row array)
-    * through `toLocalIterator` — no full materialization on the driver. Runs
-    * inside the admission slot and the query-timeout worker, so a timeout or
-    * kill interrupts the producing jobs mid-stream (the reference's
-    * cancel-during-DoGet semantics).
+  /** Stream a result DataFrame chunked (Arrow IPC or a JSON row array) —
+    * no full materialization on the driver. The Arrow schema is built
+    * before the headers go out, so a result type without an Arrow mapping
+    * is a 400, not a truncated 200. Runs inside the admission slot and the
+    * query-timeout worker, so a timeout or kill interrupts the producing
+    * jobs mid-stream (the reference's cancel-during-DoGet semantics).
     */
   private def streamResult(ex: HttpExchange, wantJson: Boolean, df: DataFrame): Resp = {
+    val write: java.io.OutputStream => Long =
+      if (wantJson) writeJson(df, _) else ArrowIO.exporter(df)
     val ct = if (wantJson) "application/json" else "application/vnd.apache.arrow.stream"
     ex.getResponseHeaders.set("Content-Type", ct)
     ex.setAttribute(HeadersSentKey, java.lang.Boolean.TRUE)
@@ -402,24 +406,27 @@ final class GraftHttpServer(
         out.write(b, off, len); count += len
       }
     }
-    var rows = 0L
-    if (wantJson) {
-      val w = new java.io.OutputStreamWriter(new java.io.BufferedOutputStream(os, 64 * 1024),
-        StandardCharsets.UTF_8)
-      w.write("[")
-      val it = df.toJSON.toLocalIterator()
-      var first = true
-      while (it.hasNext) {
-        if (!first) w.write(",")
-        w.write(it.next()); first = false; rows += 1
-      }
-      w.write("]")
-      w.flush()
-    } else rows = ArrowIO.writeArrowStream(df, os)
+    val rows = write(os)
     os.flush()
     ex.setAttribute(BytesKey, count)
     ex.setAttribute(RowsKey, rows)
     Streamed
+  }
+
+  /** A JSON row array through `toLocalIterator`, one row resident at a time. */
+  private def writeJson(df: DataFrame, os: java.io.OutputStream): Long = {
+    val w = new java.io.OutputStreamWriter(new java.io.BufferedOutputStream(os, 64 * 1024),
+      StandardCharsets.UTF_8)
+    w.write("[")
+    val it = df.toJSON.toLocalIterator()
+    var rows = 0L
+    while (it.hasNext) {
+      if (rows > 0) w.write(",")
+      w.write(it.next()); rows += 1
+    }
+    w.write("]")
+    w.flush()
+    rows
   }
 
   private def jsonError(msg: String): Array[Byte] =
@@ -682,7 +689,11 @@ final class GraftHttpServer(
         case _ => Ingest.IfExists.Unspecified
       }
       try {
-        val data = ArrowIO.fromArrowStream(session.spark, ex.getRequestBody.readAllBytes())
+        val body = ex.getRequestBody.readAllBytes()
+        // a truncated or non-Arrow body fails here, before the table is touched
+        val data = try ArrowIO.fromArrowStream(session.spark, body) catch {
+          case e: java.io.IOException => return (400, "application/json", jsonError(e.getMessage))
+        }
         val result = Ingest.ingest(session.spark, data, table, mode)
         (200, "application/json",
           (s"""{"table":${quote(result.table)},"rows":${result.rowsIngested},""" +

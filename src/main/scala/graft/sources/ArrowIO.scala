@@ -1,13 +1,12 @@
 package graft.sources
 
 import graft.types.TypeMapping
-import org.apache.arrow.memory.RootAllocator
-import org.apache.arrow.vector._
-import org.apache.arrow.vector.complex.{ListVector, MapVector, StructVector}
-import org.apache.arrow.vector.ipc.{ArrowStreamReader, ArrowStreamWriter}
-import org.apache.spark.sql.{DataFrame, Row, SparkSession}
-import org.apache.spark.sql.types._
+import org.apache.arrow.vector.ipc.{ArrowStreamWriter, ReadChannel, WriteChannel}
+import org.apache.arrow.vector.ipc.message.{IpcOption, MessageSerializer}
+import org.apache.arrow.vector.types.pojo.{ArrowType, Field}
+import org.apache.spark.sql.{DataFrame, GraftDatasetShim, SparkSession}
 import java.io.{ByteArrayInputStream, ByteArrayOutputStream}
+import java.nio.channels.Channels
 import scala.jdk.CollectionConverters._
 
 /** Arrow IPC stream export/import — the wire format of the reference's
@@ -16,12 +15,13 @@ import scala.jdk.CollectionConverters._
   * this environment the transport stops at IPC stream bytes; a Flight SQL
   * endpoint would wrap these calls 1:1.
   *
-  * Batched via `toLocalIterator` so only `batchSize` rows are resident on the
-  * driver at a time — the executors stream partitions sequentially.
-  *
-  * Value coverage: all atomic types, arrays of atomics, structs of atomics,
-  * and maps with atomic keys/values (schema mapping in
-  * [[graft.types.TypeMapping]]; deeper nesting throws a clear error).
+  * [[graft.types.TypeMapping]] is the schema contract in both directions
+  * (GeoArrow tags, UTC timestamps, decimals, ingest widenings); Spark's own
+  * `ArrowConverters` moves the values. Export encodes record batches on the
+  * executors and streams them partition by partition, so the driver holds
+  * at most one partition's encoded batches. Ingest decodes the uploaded
+  * batches into a DataFrame without building driver rows. Every type
+  * `TypeMapping` maps, at any nesting depth, travels both ways.
   */
 object ArrowIO {
 
@@ -32,10 +32,31 @@ object ArrowIO {
     out.toByteArray
   }
 
-  /** Stream a DataFrame as an Arrow IPC stream directly onto `out` — the
-    * transport path for results larger than driver memory: only one
-    * `batchSize` batch is resident at a time, written as it fills.
+  /** Stream a DataFrame as an Arrow IPC stream directly onto `out`, in
+    * batches of at most `batchSize` rows. Returns the number of rows
+    * streamed (instrumentation's rows_fetched).
     */
+  def writeArrowStream(df: DataFrame, out: java.io.OutputStream, batchSize: Int = 4096): Long =
+    exporter(df, batchSize)(out)
+
+  /** [[writeArrowStream]] in two steps: the Arrow schema is built now, so a
+    * result type without an Arrow mapping fails here with an
+    * IllegalArgumentException, before any byte is written; the returned
+    * function streams the result.
+    */
+  def exporter(df: DataFrame, batchSize: Int = 4096): java.io.OutputStream => Long = {
+    val arrowSchema = TypeMapping.toArrowSchema(df.schema, geometryOutputs(df))
+    out => {
+      val channel = new WriteChannel(Channels.newChannel(out))
+      MessageSerializer.serialize(channel, arrowSchema)
+      val rows = GraftDatasetShim.withArrowBatches(df, batchSize) {
+        _.foldLeft(0L) { case (n, (count, batch)) => channel.write(batch); n + count }
+      }
+      ArrowStreamWriter.writeEndOfStream(channel, IpcOption.DEFAULT)
+      rows
+    }
+  }
+
   /** Output columns whose defining expression produces WKB geometry — a
     * StaticInvoke into the [[graft.plans.Wkb]] kernel returning BINARY.
     * Export auto-tags these with `ARROW:extension:name = geoarrow.wkb`, the
@@ -62,185 +83,42 @@ object ArrowIO {
     plan.output.filter(at => geomIds.contains(at.exprId)).map(_.name).toSet
   } catch { case scala.util.control.NonFatal(_) => Set.empty }
 
-  /** Returns the number of rows streamed (instrumentation's rows_fetched). */
-  def writeArrowStream(df: DataFrame, out: java.io.OutputStream, batchSize: Int = 4096): Long = {
-    val schema = df.schema
-    val arrowSchema = TypeMapping.toArrowSchema(schema, geometryOutputs(df))
-    val allocator = new RootAllocator()
-    val root = VectorSchemaRoot.create(arrowSchema, allocator)
-    val writer = new ArrowStreamWriter(root, null, out)
-    var total = 0L
-    try {
-      writer.start()
-      val it = df.toLocalIterator()
-      val buffer = new scala.collection.mutable.ArrayBuffer[Row](batchSize)
-      def flush(): Unit = if (buffer.nonEmpty) {
-        root.allocateNew()
-        buffer.zipWithIndex.foreach { case (row, i) => writeRow(root, schema, row, i) }
-        root.setRowCount(buffer.size)
-        writer.writeBatch()
-        total += buffer.size
-        buffer.clear()
-      }
-      while (it.hasNext) {
-        buffer += it.next()
-        if (buffer.size >= batchSize) flush()
-      }
-      flush()
-      writer.end()
-      total
-    } finally {
-      writer.close(); root.close(); allocator.close()
-    }
-  }
-
-  private def writeRow(root: VectorSchemaRoot, schema: StructType, row: Row, i: Int): Unit = {
-    schema.fields.zipWithIndex.foreach { case (f, c) =>
-      val vec = root.getVector(c)
-      if (row.isNullAt(c)) vec.asInstanceOf[FieldVector].setNull(i)
-      else writeAny(vec, f.dataType, row.get(c), i)
-    }
-  }
-
-  private def writeAny(vec: FieldVector, dt: DataType, value: Any, i: Int): Unit =
-    (vec, dt) match {
-      case (v: BitVector, BooleanType) => v.setSafe(i, if (value.asInstanceOf[Boolean]) 1 else 0)
-      case (v: TinyIntVector, ByteType) => v.setSafe(i, value.asInstanceOf[Byte])
-      case (v: SmallIntVector, ShortType) => v.setSafe(i, value.asInstanceOf[Short])
-      case (v: IntVector, IntegerType) => v.setSafe(i, value.asInstanceOf[Int])
-      case (v: BigIntVector, LongType) => v.setSafe(i, value.asInstanceOf[Long])
-      case (v: Float4Vector, FloatType) => v.setSafe(i, value.asInstanceOf[Float])
-      case (v: Float8Vector, DoubleType) => v.setSafe(i, value.asInstanceOf[Double])
-      case (v: DecimalVector, _: DecimalType) =>
-        v.setSafe(i, value.asInstanceOf[java.math.BigDecimal])
-      case (v: VarCharVector, StringType) =>
-        v.setSafe(i, value.asInstanceOf[String].getBytes("UTF-8"))
-      case (v: VarBinaryVector, BinaryType) => v.setSafe(i, value.asInstanceOf[Array[Byte]])
-      case (v: DateDayVector, DateType) =>
-        v.setSafe(i, value.asInstanceOf[java.sql.Date].toLocalDate.toEpochDay.toInt)
-      case (v: TimeStampMicroVector, TimestampNTZType) =>
-        val ldt = value.asInstanceOf[java.time.LocalDateTime]
-        v.setSafe(i, ldt.toEpochSecond(java.time.ZoneOffset.UTC) * 1000000L + ldt.getNano / 1000L)
-      case (v: TimeStampMicroTZVector, TimestampType) =>
-        val ts = value.asInstanceOf[java.sql.Timestamp]
-        v.setSafe(i, ts.getTime * 1000L + (ts.getNanos % 1000000) / 1000L)
-      case (v: MapVector, MapType(kt, vt, _)) =>
-        val entries = value.asInstanceOf[scala.collection.Map[Any, Any]]
-        val w = v.getWriter
-        w.setPosition(i)
-        w.startMap()
-        entries.foreach { case (k, mv) =>
-          w.startEntry()
-          writeScalar(w.key(), kt, k)
-          writeScalar(w.value(), vt, mv)
-          w.endEntry()
-        }
-        w.endMap()
-      case (v: StructVector, StructType(fields)) =>
-        val struct = value.asInstanceOf[Row]
-        fields.zipWithIndex.foreach { case (f, j) =>
-          val child = v.getChild(f.name)
-          if (struct.isNullAt(j)) child.setNull(i)
-          else writeAny(child, f.dataType, struct.get(j), i)
-        }
-        v.setIndexDefined(i)
-      case (v: ListVector, ArrayType(elem, _)) =>
-        val values = value.asInstanceOf[scala.collection.Seq[Any]]
-        val w = v.getWriter
-        w.setPosition(i)
-        w.startList()
-        values.foreach { x => writeScalar(w, elem, x) }
-        w.endList()
-      case other =>
-        throw new IllegalArgumentException(s"Arrow export unsupported for $dt -> ${other._1.getClass}")
-    }
-
-  /** Scalar write through any BaseWriter (list elements, map keys/values).
-    * Nulls must be written explicitly — casting null to a primitive would
-    * silently corrupt the wire value to 0.
-    */
-  private def writeScalar(w: org.apache.arrow.vector.complex.writer.BaseWriter.ListWriter,
-      dt: DataType, x: Any): Unit =
-    if (x == null) dt match {
-      case BooleanType => w.bit().writeNull()
-      case IntegerType => w.integer().writeNull()
-      case LongType => w.bigInt().writeNull()
-      case FloatType => w.float4().writeNull()
-      case DoubleType => w.float8().writeNull()
-      case StringType => w.varChar().writeNull()
-      case other => throw new IllegalArgumentException(s"Arrow nested null unsupported for $other")
-    } else dt match {
-      case BooleanType => w.bit().writeBit(if (x.asInstanceOf[Boolean]) 1 else 0)
-      case IntegerType => w.integer().writeInt(x.asInstanceOf[Int])
-      case LongType => w.bigInt().writeBigInt(x.asInstanceOf[Long])
-      case FloatType => w.float4().writeFloat4(x.asInstanceOf[Float])
-      case DoubleType => w.float8().writeFloat8(x.asInstanceOf[Double])
-      case StringType =>
-        w.varChar().writeVarChar(new org.apache.arrow.vector.util.Text(x.asInstanceOf[String]))
-      case other => throw new IllegalArgumentException(s"Arrow nested-scalar export unsupported for $other")
-    }
-
-  /** Import an Arrow IPC stream into a DataFrame (the ingest direction):
-    * schema via TypeMapping, values batch-by-batch.
+  /** Import an Arrow IPC stream into a DataFrame (the ingest direction).
+    * The Spark schema comes from TypeMapping. Before any buffer is read,
+    * each incoming field must have the layout Spark decodes for its mapped
+    * type: a widened `uint8` would otherwise be read as 2-byte values.
+    * A mismatch is an IllegalArgumentException; a truncated or non-Arrow
+    * body is an IOException.
     */
   def fromArrowStream(spark: SparkSession, bytes: Array[Byte]): DataFrame = {
-    val allocator = new RootAllocator()
-    val reader = new ArrowStreamReader(new ByteArrayInputStream(bytes), allocator)
-    try {
-      val root = reader.getVectorSchemaRoot
-      val schema = TypeMapping.fromArrowSchema(root.getSchema)
-      val rows = scala.collection.mutable.ArrayBuffer.empty[Row]
-      while (reader.loadNextBatch()) {
-        (0 until root.getRowCount).foreach { i =>
-          rows += Row.fromSeq(schema.fields.indices.map(c => readValue(root.getVector(c), schema.fields(c).dataType, i)))
-        }
-      }
-      spark.createDataFrame(rows.asJava, schema)
-    } finally {
-      reader.close(); allocator.close()
+    // Arrow allocates a message's stated length before reading it: the first
+    // bytes of a text body would ask for up to 2 GiB
+    val head = java.nio.ByteBuffer.wrap(bytes).order(java.nio.ByteOrder.LITTLE_ENDIAN)
+    val schemaLength =
+      if (bytes.length >= 8 && head.getInt(0) == -1) head.getInt(4)
+      else if (bytes.length >= 4) head.getInt(0) else 0
+    if (schemaLength < 0 || schemaLength > bytes.length)
+      throw new java.io.IOException("body is not an Arrow IPC stream")
+    val in = Channels.newChannel(new ByteArrayInputStream(bytes))
+    val arrowSchema = MessageSerializer.deserializeSchema(new ReadChannel(in))
+    val schema = TypeMapping.fromArrowSchema(arrowSchema)
+    arrowSchema.getFields.asScala.zip(schema.fields).foreach { case (field, sf) =>
+      require(sameLayout(field, TypeMapping.toArrowField(sf.name, sf.dataType, sf.nullable)),
+        s"Arrow column ${field.getName} (${field.getType}) cannot be ingested as " +
+          sf.dataType.sql)
     }
+    GraftDatasetShim.fromArrowBatches(spark, in, schema)
   }
 
-  private def readValue(vec: FieldVector, dt: DataType, i: Int): Any = {
-    if (vec.isNull(i)) return null
-    (vec, dt) match {
-      case (v: BitVector, BooleanType) => v.get(i) == 1
-      case (v: TinyIntVector, ByteType) => v.get(i)
-      case (v: SmallIntVector, ShortType) => v.get(i)
-      case (v: IntVector, IntegerType) => v.get(i)
-      case (v: BigIntVector, LongType) => v.get(i)
-      case (v: Float4Vector, FloatType) => v.get(i)
-      case (v: Float8Vector, DoubleType) => v.get(i)
-      case (v: DecimalVector, _: DecimalType) => v.getObject(i)
-      case (v: VarCharVector, StringType) => new String(v.get(i), "UTF-8")
-      case (v: VarBinaryVector, BinaryType) => v.get(i)
-      case (v: DateDayVector, DateType) => java.sql.Date.valueOf(java.time.LocalDate.ofEpochDay(v.get(i)))
-      case (v: TimeStampMicroVector, TimestampNTZType) =>
-        java.time.LocalDateTime.ofEpochSecond(Math.floorDiv(v.get(i), 1000000L),
-          (Math.floorMod(v.get(i), 1000000L) * 1000L).toInt, java.time.ZoneOffset.UTC)
-      case (v: TimeStampMicroTZVector, TimestampType) =>
-        val micros = v.get(i)
-        val ts = new java.sql.Timestamp(Math.floorDiv(micros, 1000L))
-        ts.setNanos((Math.floorMod(micros, 1000000L) * 1000L).toInt)
-        ts
-      case (v: MapVector, MapType(kt, vt, _)) =>
-        v.getObject(i).asInstanceOf[java.util.List[_]].asScala.map { e =>
-          val m = e.asInstanceOf[java.util.Map[String, AnyRef]]
-          fromArrowObject(m.get(MapVector.KEY_NAME), kt) -> fromArrowObject(m.get(MapVector.VALUE_NAME), vt)
-        }.toMap
-      case (v: StructVector, StructType(fields)) =>
-        val m = v.getObject(i).asInstanceOf[java.util.Map[String, AnyRef]]
-        Row.fromSeq(fields.toSeq.map(f => fromArrowObject(m.get(f.name), f.dataType)))
-      case (v: ListVector, ArrayType(elem, _)) =>
-        v.getObject(i).asScala.toSeq.map(x => fromArrowObject(x.asInstanceOf[AnyRef], elem))
-      case other => throw new IllegalArgumentException(s"Arrow import unsupported for $dt")
-    }
-  }
-
-  /** Convert a raw Arrow getObject value to the Spark-facing value. */
-  private def fromArrowObject(x: AnyRef, dt: DataType): Any = x match {
-    case null => null
-    case t: org.apache.arrow.vector.util.Text => t.toString
-    case other => other
-  }
+  /** Same vector layout: equal types (any time zone on a timestamp, either
+    * key order on a map), no dictionary encoding, same children.
+    */
+  private def sameLayout(got: Field, want: Field): Boolean =
+    got.getDictionary == null && ((got.getType, want.getType) match {
+      case (g: ArrowType.Timestamp, w: ArrowType.Timestamp) =>
+        g.getUnit == w.getUnit && (g.getTimezone == null) == (w.getTimezone == null)
+      case (_: ArrowType.Map, _: ArrowType.Map) => true
+      case (g, w) => g == w
+    }) && got.getChildren.size == want.getChildren.size &&
+      got.getChildren.asScala.zip(want.getChildren.asScala).forall { case (g, w) => sameLayout(g, w) }
 }

@@ -1,6 +1,11 @@
 package org.apache.spark.sql
 
+import org.apache.spark.TaskContext
+import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.plans.logical.LogicalPlan
+import org.apache.spark.sql.execution.{CommandResultExec, LocalTableScanExec, SQLExecution}
+import org.apache.spark.sql.execution.arrow.ArrowConverters
+import org.apache.spark.sql.types.StructType
 
 /** Bridge to the package-private `Dataset.ofRows`, the one Spark API that
   * builds a DataFrame directly over a LogicalPlan. The engine's prepared-plan
@@ -64,4 +69,46 @@ object GraftDatasetShim {
     * the bounded listener queue dropped the event under load.
     */
   def observedOrEmpty(obs: Observation): Map[String, Any] = obs.getOrEmpty
+
+  /** Run `df` inside an action scope (as `Dataset.toLocalIterator` does, so
+    * query listeners record it) and hand `consume` its result as Arrow IPC
+    * record-batch messages, each paired with its row count, in partition
+    * order. Spark's `ArrowConverters` encodes the batches on the executors;
+    * the driver fetches them one partition, one job, at a time. Results
+    * already on the driver (local relations, command results) are encoded
+    * there, with no job. Batches carry at most `maxRecordsPerBatch` rows and
+    * use Spark's Arrow layout: UTC timestamps, no large var types.
+    */
+  def withArrowBatches[T](df: DataFrame, maxRecordsPerBatch: Int)(
+      consume: Iterator[(Long, Array[Byte])] => T): T = {
+    val qe = df.asInstanceOf[classic.Dataset[Row]].queryExecution
+    val schema = df.schema
+    def encode(rows: Iterator[InternalRow]): Iterator[(Long, Array[Byte])] = {
+      var read = 0L
+      var sent = 0L
+      ArrowConverters.toBatchIterator(rows.map { r => read += 1; r }, schema,
+        maxRecordsPerBatch.toLong, timeZoneId = "UTC", errorOnDuplicatedFieldNames = false,
+        largeVarTypes = false, TaskContext.get())
+        .map { batch => val n = read - sent; sent = read; (n, batch) }
+    }
+    SQLExecution.withNewExecutionId(qe, Some("toArrowStream")) {
+      qe.executedPlan.resetMetrics()
+      consume(qe.executedPlan match {
+        case local @ (_: LocalTableScanExec | _: CommandResultExec) =>
+          // encoded in full: the iterator closes its Arrow buffers at its end
+          encode(local.executeCollect().iterator).toArray.iterator
+        case plan => plan.execute().mapPartitionsInternal(encode).toLocalIterator
+      })
+    }
+  }
+
+  /** A DataFrame over the Arrow IPC record batches left on `in`, laid out
+    * as Spark's Arrow mapping of `schema`. `ArrowConverters` reads the
+    * batch messages now and decodes them without building `Row`s (on the
+    * executors once they outgrow `arrowLocalRelationThreshold`).
+    */
+  def fromArrowBatches(spark: SparkSession, in: java.nio.channels.ReadableByteChannel,
+      schema: StructType): DataFrame =
+    ArrowConverters.toDataFrame(ArrowConverters.getBatchesFromStream(in), schema.json,
+      spark.asInstanceOf[classic.SparkSession])
 }

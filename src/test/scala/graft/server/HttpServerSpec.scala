@@ -234,6 +234,33 @@ class HttpServerSpec extends AnyFunSuite {
     assert(resp.statusCode() == 200)
     assert(resp.body().contains("\"executions\":") && resp.body().contains("duration_ms"))
 
+    // ... and an Arrow-encoded one. The listener bus is asynchronous but in
+    // order, so its record lands between those of two marker queries:
+    // driver-side collects of 13 and 17 rows.
+    def metrics() = client.send(
+      HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/metrics"))
+        .GET().header("Authorization", s"Bearer $token").build(),
+      HttpResponse.BodyHandlers.ofString())
+    val Rec = """\{"name":"([^"]*)","duration_ms":\d+,"status":"([^"]*)","output_rows":(-?\d+)\}""".r
+    def marker(n: Int): Seq[(String, String, Long)] = {
+      spark.sql((1 to n).mkString("SELECT x FROM VALUES (", "), (", ") AS t(x)")).collect()
+      val deadline = System.nanoTime() + 10000000000L
+      def recent() = Rec.findAllMatchIn(metrics().body())
+        .map(m => (m.group(1), m.group(2), m.group(3).toLong)).toSeq
+      var r = recent()
+      while (!r.contains(("collect", "success", n.toLong)) && System.nanoTime() < deadline) {
+        Thread.sleep(50); r = recent()
+      }
+      r
+    }
+    marker(13)
+    assert(post("/sql", "SELECT r_name FROM region", "Authorization" -> s"Bearer $token")
+      .statusCode() == 200)
+    val between = marker(17).dropWhile(_ != (("collect", "success", 13L))).drop(1)
+      .takeWhile(_ != (("collect", "success", 17L)))
+    assert(between.exists { case (name, status, _) => status == "success" && name != "command" },
+      between)
+
     val roToken = Auth.mintToken(secret, "reader", "readonly", "graft-instance")
     val denied = client.send(
       HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/metrics"))
@@ -407,6 +434,65 @@ class HttpServerSpec extends AnyFunSuite {
       post("/sql", "SET SESSION gizmosql.bypass_queue = false",
         "Authorization" -> s"Bearer $token", "Accept" -> "application/json")
     }
+  }
+
+  private def ingest(payload: Array[Byte], table: String, mode: String): HttpResponse[String] =
+    client.send(HttpRequest.newBuilder(URI.create(s"http://127.0.0.1:$port/ingest"))
+      .POST(HttpRequest.BodyPublishers.ofByteArray(payload))
+      .header("Authorization", s"Bearer $token")
+      .header("X-Graft-Table", table).header("X-Graft-Mode", mode).build(),
+      HttpResponse.BodyHandlers.ofString())
+
+  test("a result type without an Arrow mapping is a 400 JSON error, not a truncated 200") {
+    val resp = post("/sql", "SELECT INTERVAL '1' YEAR AS ym", "Authorization" -> s"Bearer $token")
+    assert(resp.statusCode() == 400)
+    assert(new String(resp.body(), StandardCharsets.UTF_8).contains("\"error\":"))
+    // the same type still answers as JSON
+    val json = post("/sql", "SELECT INTERVAL '1' YEAR AS ym",
+      "Authorization" -> s"Bearer $token", "Accept" -> "application/json")
+    assert(json.statusCode() == 200)
+  }
+
+  test("duplicate output names export every column") {
+    val resp = post("/sql", "SELECT 1 AS a, 2 AS a", "Authorization" -> s"Bearer $token")
+    assert(resp.statusCode() == 200)
+    val reader = new org.apache.arrow.vector.ipc.ArrowStreamReader(
+      new java.io.ByteArrayInputStream(resp.body()), new org.apache.arrow.memory.RootAllocator())
+    try {
+      val root = reader.getVectorSchemaRoot
+      assert(reader.loadNextBatch())
+      assert(root.getSchema.getFields.size == 2 && root.getRowCount == 1)
+      assert(root.getVector(0).getObject(0) == 1 && root.getVector(1).getObject(0) == 2)
+    } finally reader.close()
+  }
+
+  test("ingest rejects a uint8 column with 400 and creates no table") {
+    val alloc = new org.apache.arrow.memory.RootAllocator()
+    val vec = new org.apache.arrow.vector.UInt1Vector("u", alloc)
+    vec.allocateNew(2); vec.set(0, 200); vec.set(1, 7); vec.setValueCount(2)
+    val root = org.apache.arrow.vector.VectorSchemaRoot.of(vec)
+    val out = new java.io.ByteArrayOutputStream()
+    val writer = new org.apache.arrow.vector.ipc.ArrowStreamWriter(root, null, out)
+    writer.start(); writer.writeBatch(); writer.end(); writer.close()
+    root.close(); alloc.close()
+    spark.sql("DROP TABLE IF EXISTS wire_ingest_u8")
+    val resp = ingest(out.toByteArray, "wire_ingest_u8", "replace")
+    assert(resp.statusCode() == 400, resp.body())
+    assert(!spark.catalog.tableExists("wire_ingest_u8"))
+  }
+
+  test("a truncated or non-Arrow ingest body is a 400 and leaves the table unchanged") {
+    val payload = ArrowIO.toArrowStream(
+      spark.sql("SELECT r_regionkey AS k, r_name AS name FROM region"))
+    assert(ingest(payload, "wire_ingest_trunc", "replace").statusCode() == 200)
+    val resp = ingest(payload.dropRight(20), "wire_ingest_trunc", "append")
+    assert(resp.statusCode() == 400, resp.body())
+    val text = ingest("k,name\n9,NOT ARROW\n".getBytes(StandardCharsets.UTF_8),
+      "wire_ingest_trunc", "append")
+    assert(text.statusCode() == 400, text.body())
+    val count = post("/sql", "SELECT COUNT(*) AS n FROM wire_ingest_trunc",
+      "Authorization" -> s"Bearer $token", "Accept" -> "application/json")
+    assert(new String(count.body(), StandardCharsets.UTF_8) == """[{"n":5}]""")
   }
 
   test("close ends the session") {

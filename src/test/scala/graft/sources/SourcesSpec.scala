@@ -71,11 +71,12 @@ class ArrowIOSpec extends AnyFunSuite {
       StructField("l", LongType), StructField("f", FloatType),
       StructField("d", DoubleType), StructField("s", StringType),
       StructField("bin", BinaryType), StructField("dt", DateType),
-      StructField("dec", DecimalType(15, 2))))
+      StructField("dec", DecimalType(15, 2)), StructField("iv", DayTimeIntervalType())))
+    val interval = java.time.Duration.ofSeconds(90061, 5000)
     val rows = List(
       Row(true, 1, 2L, 1.5f, 2.5, "hello", Array[Byte](1, 2), java.sql.Date.valueOf("2024-01-15"),
-        new java.math.BigDecimal("123.45")),
-      Row(null, null, null, null, null, null, null, null, null))
+        new java.math.BigDecimal("123.45"), interval),
+      Row(null, null, null, null, null, null, null, null, null, null))
     val df = spark.createDataFrame(rows.asJava, schema)
     val bytes = ArrowIO.toArrowStream(df)
     val back = ArrowIO.fromArrowStream(spark, bytes)
@@ -87,6 +88,7 @@ class ArrowIOSpec extends AnyFunSuite {
     assert(rt(0).getDate(7) == orig(0).getDate(7))
     assert(rt(0).getDecimal(8).compareTo(orig(0).getDecimal(8)) == 0)
     assert((0 until 9).forall(rt(1).isNullAt))
+    assert(rt(0).getAs[java.time.Duration](9) == interval && rt(1).isNullAt(9))
   }
 
   test("GeoArrow WKB extension metadata round-trips through the Arrow stream") {
@@ -179,11 +181,21 @@ class ArrowIOSpec extends AnyFunSuite {
     val schema = StructType(Seq(
       StructField("id", LongType),
       StructField("st", StructType(Seq(StructField("x", IntegerType), StructField("y", StringType)))),
-      StructField("mp", MapType(StringType, IntegerType))))
+      StructField("mp", MapType(StringType, IntegerType)),
+      StructField("decs", ArrayType(DecimalType(10, 2))),
+      StructField("dates", ArrayType(DateType)),
+      StructField("stamps", ArrayType(TimestampType)),
+      StructField("structs", ArrayType(StructType(Seq(
+        StructField("x", IntegerType), StructField("y", StringType))))),
+      StructField("lists", MapType(StringType, ArrayType(IntegerType)))))
     val rows = List(
-      Row(1L, Row(7, "seven"), Map("a" -> 1, "b" -> 2)),
-      Row(2L, Row(8, null), Map("c" -> 3, "nullv" -> null)),
-      Row(3L, null, null))
+      Row(1L, Row(7, "seven"), Map("a" -> 1, "b" -> 2),
+        Seq(new java.math.BigDecimal("1.25"), null), Seq(java.sql.Date.valueOf("2024-02-29")),
+        Seq(java.sql.Timestamp.valueOf("2024-01-15 10:30:05.123456")),
+        Seq(Row(1, "one"), null, Row(null, "n")), Map("p" -> Seq(1, null, 3), "q" -> null)),
+      Row(2L, Row(8, null), Map("c" -> 3, "nullv" -> null), Seq(), null, Seq(null),
+        Seq(), Map("e" -> Seq())),
+      Row(3L, null, null, null, null, null, null, null))
     val df = spark.createDataFrame(rows.asJava, schema)
     val back = ArrowIO.fromArrowStream(spark, ArrowIO.toArrowStream(df)).orderBy("id").collect()
     assert(back(0).getStruct(1) == Row(7, "seven"))
@@ -191,14 +203,20 @@ class ArrowIOSpec extends AnyFunSuite {
     assert(back(1).getStruct(1).isNullAt(1))
     assert(back(1).getMap[String, Any](2) == Map("c" -> 3, "nullv" -> null)) // null map value preserved
     assert(back(2).isNullAt(1) && back(2).isNullAt(2))
+    val orig = df.orderBy("id").collect()
+    assert(back.map(r => (3 to 7).map(r.get)).toSeq == orig.map(r => (3 to 7).map(r.get)).toSeq)
   }
 
   test("timestamps round-trip at microsecond precision") {
-    val schema = StructType(Seq(StructField("ts", TimestampNTZType)))
+    val schema = StructType(Seq(StructField("ts", TimestampNTZType),
+      StructField("tstz", TimestampType)))
     val t = java.time.LocalDateTime.of(2024, 1, 15, 10, 30, 5, 123456000)
-    val df = spark.createDataFrame(List(Row(t)).asJava, schema)
+    val tz = java.sql.Timestamp.from(java.time.Instant.parse("2024-01-15T10:30:05.654321Z"))
+    val df = spark.createDataFrame(List(Row(t, tz)).asJava, schema)
     val back = ArrowIO.fromArrowStream(spark, ArrowIO.toArrowStream(df))
     assert(back.collect().head.getAs[java.time.LocalDateTime](0) == t)
+    assert(back.schema(1).dataType == TimestampType)
+    assert(back.collect().head.getAs[java.sql.Timestamp](1) == tz)
   }
 
   test("batching splits large results without losing rows") {
