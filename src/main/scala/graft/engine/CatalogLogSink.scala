@@ -100,7 +100,7 @@ final class CatalogLogSink(
   private val writer = new Thread(() => GraftLog.withSinkGuard(writerLoop()),
     s"graft-catalog-log-$catalog")
   writer.setDaemon(true)
-  CatalogLogSink.register(catalog, Set("logs"))
+  CatalogLogSink.register(catalog)
   writer.start()
 
   private def writerLoop(): Unit = {
@@ -207,22 +207,19 @@ object CatalogLogSink {
   private def strOrNull(s: String): String =
     if (s == null || s.isEmpty) null else s
 
-  // Live sink catalogs → their system-managed tables, consulted by
-  // StatementGuard (admin-read-only gate), Statement (DETACH refusal,
-  // pre-resolve REFRESH), and PlanCache (volatile-table bypass).
-  // Process-wide, like AttachManager's read-only-roots registry. The
-  // instrumentation sink registers here too — identical protection
-  // contract, different table set.
-  private val active = new AtomicReference[Map[String, Set[String]]](Map.empty)
-  private[engine] def register(name: String, tables: Set[String]): Unit = {
-    active.updateAndGet(_ + (name.toLowerCase -> tables)); ()
+  // Live sink catalogs, consulted by StatementGuard (admin-read-only gate)
+  // and Statement (DETACH refusal). Readers need no special case: the sinks
+  // append under CommitLock, which moves the tables' versions like any
+  // write (TableVersions). Process-wide, like AttachManager's
+  // read-only-roots registry. The instrumentation sink registers here too
+  // — identical protection contract, different tables.
+  private val active = new AtomicReference[Set[String]](Set.empty)
+  private[engine] def register(name: String): Unit = {
+    active.updateAndGet(_ + name.toLowerCase); ()
   }
   private[engine] def unregister(name: String): Unit = {
     active.updateAndGet(_ - name.toLowerCase); ()
   }
-  def activeCatalogs: Set[String] = active.get.keySet
+  def activeCatalogs: Set[String] = active.get
   def isLogCatalog(db: String): Boolean = active.get.contains(db.toLowerCase)
-  /** The sink-managed tables of an active catalog (empty when inactive). */
-  def tablesOf(catalog: String): Set[String] =
-    active.get.getOrElse(catalog.toLowerCase, Set.empty)
 }

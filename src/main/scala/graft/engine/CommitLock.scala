@@ -5,6 +5,12 @@ import java.nio.file.{Files, Paths, StandardOpenOption}
 import java.util.concurrent.ConcurrentHashMap
 import java.util.concurrent.locks.ReentrantLock
 import org.apache.spark.sql.SparkSession
+import org.apache.spark.sql.catalyst.TableIdentifier
+import org.apache.spark.sql.catalyst.catalog.{DatabaseEvent, ExternalCatalogEventListener,
+  ExternalCatalogWithListener, RenameTableEvent, TableEvent}
+import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, View}
+import org.apache.spark.sql.execution.datasources.LogicalRelation
+import scala.jdk.CollectionConverters._
 
 /** Per-table commit serialization — in-process AND cross-process.
   *
@@ -35,7 +41,9 @@ import org.apache.spark.sql.SparkSession
   *      manifest write already models.
   *
   * Readers never take the lock — visibility is the manifest's job
-  * ([[ManifestCatalog]]); this lock only serializes WRITERS per table.
+  * ([[ManifestCatalog]]); this lock only serializes WRITERS per table. It
+  * is also where data writes move [[TableVersions]]: a window's close, even
+  * a failed write's, bumps its tables.
   *
   * Deadlock-free by construction: multi-table acquisitions sort names
   * first (both layers acquire in the same sorted order in every process),
@@ -67,10 +75,12 @@ object CommitLock {
   }
 
   /** Run `f` holding the commit locks for `tables` (sorted acquisition,
-    * in-process then cross-process).
+    * in-process then cross-process). `f` and the writer's next statement
+    * read the latest committed state: the writer's session syncs its
+    * [[TableVersions]] once the locks are held and again after the bump.
     */
   def withTables[T](spark: SparkSession, tables: Seq[String])(f: => T): T = {
-    val names = tables.map(_.split("\\.").last.toLowerCase).distinct.sorted
+    val names = tables.map(TableVersions.key).distinct.sorted
     val ls = names.map(lockFor)
     ls.foreach(_.lock())
     try {
@@ -81,8 +91,12 @@ object CommitLock {
       val fences = names.collect {
         case n if lockFor(n).getHoldCount == 1 => acquireFence(spark, n)
       }
+      TableVersions.sync(spark)
       try f finally fences.reverse.foreach(ch => try ch.close() catch { case _: Exception => })
-    } finally ls.reverse.foreach(_.unlock())
+    } finally {
+      try { TableVersions.bump(names); TableVersions.sync(spark) }
+      finally ls.reverse.foreach(_.unlock())
+    }
   }
 
   /** Exclusive write window for a non-transactional insert path: take the
@@ -102,4 +116,75 @@ object CommitLock {
       ManifestCatalog.unshadow(spark, table)
       f
     }
+}
+
+/** The one rule for cached plans ([[PlanCache]]) and each session's
+  * relation cache (which pins file listings): either may be used only while
+  * no table it reads has been written or redefined since it was built, by
+  * any session. Versions move on data writes (every [[CommitLock]] window,
+  * when it closes) and on catalog events (one listener per shared catalog,
+  * called synchronously on the DDL's thread: a table event bumps the table,
+  * a database or function event — ATTACH/DETACH — every table). Keys are
+  * CommitLock's bare lower-case names (`att.t` and `t` collide, which only
+  * over-invalidates); versions are values of one clock.
+  */
+object TableVersions {
+  // Written under this object's lock after the version it hands out is
+  // stored: a reader that sees clock c sees every version up to c.
+  @volatile private var clock = 0L
+  @volatile private var allMoved = 0L
+  private val versions = new ConcurrentHashMap[String, java.lang.Long]()
+  private val listening = java.util.Collections.newSetFromMap(
+    new java.util.WeakHashMap[ExternalCatalogWithListener, java.lang.Boolean]())
+  // session -> clock value its relation cache was last synced to
+  private val seen = java.util.Collections.synchronizedMap(
+    new java.util.WeakHashMap[SparkSession, Array[Long]]())
+
+  def key(table: String): String = table.split("\\.").last.toLowerCase
+
+  def bump(tables: Seq[String]): Unit = synchronized {
+    tables.foreach(t => versions.put(key(t), clock + 1))
+    clock += 1
+  }
+
+  /** True while none of `reads` ([[readsOf]]) moved after clock value `since`. */
+  private[engine] def unchangedSince(since: Long, reads: Seq[String]): Boolean =
+    allMoved <= since && reads.forall(versions.getOrDefault(_, 0L) <= since)
+
+  /** Keys of the catalog relations and views an analyzed plan reads. */
+  private[engine] def readsOf(plan: LogicalPlan): Seq[String] = plan.collectWithSubqueries {
+    case r: LogicalRelation if r.catalogTable.isDefined => key(r.catalogTable.get.identifier.table)
+    case v: View => key(v.desc.identifier.table)
+  }.distinct
+
+  private val listener: ExternalCatalogEventListener = {
+    case RenameTableEvent(_, from, to) => bump(Seq(from, to))
+    case t: TableEvent => bump(Seq(t.name))
+    case _: DatabaseEvent => synchronized { allMoved = clock + 1; clock += 1 }
+    case _ =>
+  }
+
+  /** Statement start: drop the tables that moved since this session last
+    * looked from its relation cache. Returns the clock value it synced to,
+    * the version a plan built next is stamped with. One counter read when
+    * nothing moved.
+    */
+  def sync(spark: SparkSession): Long = {
+    val at = seen.computeIfAbsent(spark, { s =>
+      val c = s.sharedState.externalCatalog
+      listening.synchronized { if (listening.add(c)) c.addListener(listener) }
+      Array(0L)
+    })
+    at.synchronized {
+      val now = clock
+      if (now > at(0)) {
+        val catalog = spark.sessionState.catalog
+        if (allMoved > at(0)) catalog.invalidateAllCachedTables()
+        else for ((t, v) <- versions.asScala if v > at(0); db <- catalog.listDatabases())
+          catalog.invalidateCachedTable(TableIdentifier(t, Some(db)))
+        at(0) = now
+      }
+      now
+    }
+  }
 }

@@ -25,8 +25,7 @@ import scala.jdk.CollectionConverters._
   *     lock, a failing batch retries record-by-record;
   *   - the catalog registers in the [[CatalogLogSink]] registry, so the
   *     whole protection contract applies unchanged: admin-read-only,
-  *     SQL-append-only, DETACH refused while live, PlanCache volatile-table
-  *     bypass, pre-resolve REFRESH;
+  *     SQL-append-only, DETACH refused while live;
   *   - declared divergence: the reference UPDATEs lifecycle rows in place
   *     (stop_time on `instances`/`sessions`, rows_fetched on
   *     `sql_executions`); an append-only parquet store records lifecycle
@@ -168,7 +167,7 @@ final class InstrumentationSink(
   private val writer = new Thread(() => GraftLog.withSinkGuard(writerLoop()),
     s"graft-instrumentation-$catalog")
   writer.setDaemon(true)
-  CatalogLogSink.register(catalog, Tables.keySet)
+  CatalogLogSink.register(catalog)
   writer.start()
 
   private def writerLoop(): Unit = {

@@ -34,8 +34,8 @@ import scala.jdk.CollectionConverters._
   *
   * Scale posture: the manifest is O(in-flight touched tables) — bytes, not
   * data — and one rename per commit; on object storage the rename becomes a
-  * conditional PUT. Reader refresh cost is a per-statement version check
-  * (one getAttr) and re-registration only when the version moved.
+  * conditional PUT. Once a commit has created the manifest, every
+  * statement's refresh reads and parses it; views re-register on a move.
   */
 object ManifestCatalog {
 
@@ -122,10 +122,10 @@ object ManifestCatalog {
   /** Route this session's reads through the current manifest: register a
     * temp view per entry (shadowing the base catalog table), drop views for
     * entries that folded away, and invalidate the session's plan cache —
-    * cached plans resolved against the previous paths. No-op (one version
-    * compare) when the manifest hasn't moved. `skip` protects tables the
-    * session's own OPEN transaction is shadowing — its read-your-writes
-    * view outranks the committed manifest.
+    * cached plans resolved against the previous paths; a moved manifest is
+    * the only signal of another process's commit. No-op when it hasn't
+    * moved. `skip` protects tables the session's own OPEN transaction is
+    * shadowing — its read-your-writes view outranks the committed manifest.
     */
   def refresh(spark: SparkSession, skip: Set[String] = Set.empty): Boolean = {
     val p = manifestPath(spark)

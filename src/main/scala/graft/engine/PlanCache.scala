@@ -9,26 +9,25 @@ import org.apache.spark.sql.execution.joins.{ShuffledHashJoinExec, SortMergeJoin
 /** Session-scoped prepared-plan cache: repeated statement texts reuse a
   * DataFrame rooted at the OPTIMIZED logical plan instead of re-running
   * parse + analysis + full optimization, the fixed per-statement Catalyst
-  * cost (~15-120 ms/statement measured on the TPC-H shapes at sf0.1 —
-  * `graft.tools.CacheProbe`). The optimized root matters beyond the first
-  * call: any action that re-wraps the plan (`count()` adds an aggregate,
-  * `write` a command) re-runs the optimizer over the whole tree per call,
-  * and over a pre-converged tree that run is one cheap fixpoint. The
+  * cost (~15-120 ms/statement measured on the TPC-H shapes at sf0.1).
+  * The optimized root matters beyond the first call: any action that
+  * re-wraps the plan (`count()` adds an aggregate, `write` a command)
+  * re-runs the optimizer over the whole tree per call, and over a
+  * pre-converged tree that run is one cheap fixpoint. The
   * reference engine gets the same effect from its prepared-statement reuse
   * (`/root/reference/src/duckdb/duckdb_statement.cpp` re-prepare path); on a
   * 100 TB cluster the win is latency-per-statement for the dashboard/repeat
   * workloads a long-lived server actually serves.
   *
-  * Correctness contract:
-  *   - Only pure queries are cached. A statement that resolves to a command
-  *     (DDL/DML — anything that can change catalog or data) is never cached
-  *     AND invalidates the session's cache, so a cached SELECT can never
-  *     read a view/table definition from before the command.
-  *   - Engine-managed mutations outside the SQL path (ATTACH/DETACH,
-  *     IMPORT DATABASE, SET — SETs can re-fold GIZMOSQL_* pseudo-function
-  *     literals) call [[invalidate]] explicitly.
-  *   - Keys are per SparkSession (sessions are isolated `newSession`s), held
-  *     weakly so closed sessions collect.
+  * Correctness contract — the [[TableVersions]] rule: a cached plan is used
+  * only while no table it reads (relations and views of its analyzed plan)
+  * has been written or redefined since it was built, by any session; a hit
+  * over a moved table is rebuilt. Commands are never cached, and through
+  * [[sql]] they flush their own session (temporary views and conf never
+  * reach the external catalog); other session-local changes (SET of
+  * settings and variables, IMPORT DATABASE, a moved manifest) call
+  * [[invalidate]]. One weakly-held 64-entry LRU per session holds each
+  * statement's DataFrame and count plan.
   */
 object PlanCache {
   // An executed plan can pin its broadcast relations (up to
@@ -37,16 +36,20 @@ object PlanCache {
   // and the ContextCleaner reclaims the blocks.
   private val MaxEntries = 64
 
-  private def newLru(): java.util.Map[String, DataFrame] =
+  private final class Entry(val df: DataFrame, val builtAt: Long, val reads: Seq[String]) {
+    @volatile var count: CountPlan = null // memoized by [[count]]
+  }
+
+  private def newLru(): java.util.Map[String, Entry] =
     java.util.Collections.synchronizedMap(
-      new java.util.LinkedHashMap[String, DataFrame](64, 0.75f, true) {
-        override def removeEldestEntry(e: java.util.Map.Entry[String, DataFrame]): Boolean =
-          size() > MaxEntries
+      new java.util.LinkedHashMap[String, Entry](64, 0.75f, true) {
+        override def removeEldestEntry(e: java.util.Map.Entry[String, Entry]): Boolean =
+          this.size() > MaxEntries
       })
 
   // Weak identity keys, same rationale as Tables.registered.
   private val bySession = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.Map[String, DataFrame]]())
+    new java.util.WeakHashMap[SparkSession, java.util.Map[String, Entry]]())
 
   // Adaptive-off clone for the static-plan probe in [[prepare]] and the
   // static branch of [[count]]. Probing under a clone (copied conf, shared
@@ -59,7 +62,7 @@ object PlanCache {
   // The clone is CACHED per live session and re-validated by conf
   // fingerprint on every use: cloneSession() builds a whole SessionState
   // (catalog, analyzer, optimizer, extension re-injection — measured
-  // 200-300 ms via graft.tools.CountPathProbe), far too hot for a per-call
+  // 200-300 ms on the count path), far too hot for a per-call
   // path, while a stale cached clone would keep planning under whatever
   // the conf was at first prepare (a live `SET autoBroadcastJoinThreshold`
   // would silently not reach it — caught by PlanCacheSpec). Comparing the
@@ -96,27 +99,39 @@ object PlanCache {
       }
     }
 
-  private def store(spark: SparkSession): java.util.Map[String, DataFrame] =
+  private def store(spark: SparkSession): java.util.Map[String, Entry] =
     bySession.synchronized {
       var m = bySession.get(spark)
       if (m == null) { m = newLru(); bySession.put(spark, m) }
       m
     }
 
+  /** The entry for `key` unless a table it reads moved since it was built. */
+  private def fresh(spark: SparkSession, key: String): Entry = {
+    val e = store(spark).get(key)
+    if (e != null && TableVersions.unchangedSince(e.builtAt, e.reads)) e else null
+  }
+
+  // `since` comes from a version sync taken before `built` was analyzed, so
+  // a write landing during the build leaves the entry stale
+  private def put(spark: SparkSession, key: String, since: Long, built: DataFrame): Entry = {
+    val e = new Entry(prepare(spark, built), since, TableVersions.readsOf(built.queryExecution.analyzed))
+    store(spark).put(key, e)
+    e
+  }
+
+  private def entry(spark: SparkSession, key: String)(build: => DataFrame): Entry =
+    Option(fresh(spark, key)).getOrElse(put(spark, key, TableVersions.sync(spark), build))
+
   /** Reuse the DataFrame prepared for `key` in this session, or build it.
     * The caller vouches that `build` is pure (no eager side effects) —
     * engine surfaces mark side-effecting operators uncacheable.
     */
-  def get(spark: SparkSession, key: String)(build: => DataFrame): DataFrame = {
-    val m = store(spark)
-    val hit = m.get(key)
-    if (hit != null) hit
-    else {
-      val df = prepare(spark, build)
-      m.put(key, df)
-      df
-    }
-  }
+  def get(spark: SparkSession, key: String)(build: => DataFrame): DataFrame =
+    entry(spark, key)(build).df
+
+  private[engine] def size(spark: SparkSession): Int =
+    Option(bySession.get(spark)).map(_.size).getOrElse(0)
 
   /** Plan-shape-based adaptive bypass, decided once per prepared plan.
     *
@@ -392,25 +407,12 @@ object PlanCache {
     }
   }
 
-  private val countBySession = java.util.Collections.synchronizedMap(
-    new java.util.WeakHashMap[SparkSession, java.util.Map[String, CountPlan]]())
-
-  private def countStore(spark: SparkSession): java.util.Map[String, CountPlan] =
-    countBySession.synchronized {
-      var m = countBySession.get(spark)
-      if (m == null) {
-        m = java.util.Collections.synchronizedMap(new java.util.HashMap[String, CountPlan]())
-        countBySession.put(spark, m)
-      }
-      m
-    }
-
   /** Execute COUNT(*) over the plan cached at `key` — the repeated-action
     * path a server's prepared statements and the bench both take.
     *
     * `df.count()` wraps the dataset's logical plan in a fresh aggregate and
     * re-pays optimizer fixpoint + adaptive stage rounds on EVERY call. Here
-    * the count-wrapped OPTIMIZED plan is memoized per (session, key)
+    * the count-wrapped OPTIMIZED plan is memoized in the key's entry
     * (logical plans are immutable), and each call roots a NEW dataset over
     * it: fresh physical plan, fresh shuffle dependencies — so every call
     * re-executes the full query (no stage or broadcast-result reuse across
@@ -419,10 +421,10 @@ object PlanCache {
     * wrapped shape passed the same static-pin probe as [[prepare]].
     */
   def count(spark: SparkSession, key: String)(build: => DataFrame): Long = {
-    val m = countStore(spark)
-    val cp = m.get(key)
+    val e = entry(spark, key)(build)
+    val cp = e.count
     val df = if (cp == null) {
-      val wrapped = get(spark, key)(build).groupBy().count()
+      val wrapped = e.df.groupBy().count()
       val optimized = wrapped.queryExecution.optimizedPlan
       val (probed, static, parts) = prepareOptimized(spark, optimized)
       val executed = if (static) Some(probed.queryExecution.executedPlan) else None
@@ -430,7 +432,7 @@ object PlanCache {
         if (executed.exists(exchangeFree)) Some(probed) else None
       val template =
         if (reusable.isEmpty && executed.exists(cloneSafe)) executed else None
-      m.put(key, CountPlan(optimized, static, parts, reusable, template))
+      e.count = CountPlan(optimized, static, parts, reusable, template)
       probed
     } else if (cp.reusable.isDefined) {
       // exchange/broadcast/subquery-free static plan: re-executing the same
@@ -456,42 +458,27 @@ object PlanCache {
 
   /** Run a SQL text through the cache. Commands execute eagerly in
     * `spark.sql` — they are detected from the analyzed plan, never cached,
-    * and flush the session's cache (they may have changed what cached plans
-    * resolved against).
+    * and flush the session's own cache. `args` bind named parameters; a
+    * statement with arguments is never cached (its text is not its key).
     */
-  def sql(spark: SparkSession, text: String): DataFrame = {
-    val m = store(spark)
-    val hit = m.get(text)
-    if (hit != null) hit
+  def sql(spark: SparkSession, text: String, args: Map[String, Any] = Map.empty): DataFrame = {
+    val hit = if (args.isEmpty) fresh(spark, text) else null
+    if (hit != null) hit.df
     else {
-      val df = spark.sql(text)
+      val since = TableVersions.sync(spark) // before analysis, see [[put]]
+      val df = if (args.isEmpty) spark.sql(text) else spark.sql(text, args)
       val isCommand = df.queryExecution.analyzed.collectFirst {
         case c: Command => c
         case r: CommandResult => r
       }.isDefined
-      // A log-catalog table is appended CONTINUOUSLY by the catalog log
-      // sink outside the SQL path — a cached optimized plan would pin its
-      // pruned file listing forever. Serve those uncached (volatile-table
-      // rule; nothing else invalidates on the sink's behalf).
-      val touchesLogCatalog = CatalogLogSink.activeCatalogs.nonEmpty &&
-        df.queryExecution.analyzed.collectFirst {
-          case r: org.apache.spark.sql.execution.datasources.LogicalRelation
-              if r.catalogTable.exists(t =>
-                CatalogLogSink.isLogCatalog(t.identifier.database.getOrElse(""))) => r
-        }.isDefined
       if (isCommand) { invalidate(spark); df }
-      else if (touchesLogCatalog) df
-      else {
-        val prepared = prepare(spark, df)
-        m.put(text, prepared)
-        prepared
-      }
+      else if (args.nonEmpty) df
+      else put(spark, text, since, df).df
     }
   }
 
   def invalidate(spark: SparkSession): Unit = {
     bySession.remove(spark)
-    countBySession.remove(spark)
     ()
   }
 }

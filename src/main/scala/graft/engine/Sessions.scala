@@ -78,18 +78,16 @@ final class SessionState(
   def executePrepared(handle: String, params: Map[String, Any] = Map.empty) =
     lookupPrepared(handle) match {
       case None => throw new IllegalArgumentException(s"unknown prepared statement $handle")
-      case Some(p) => runPrepared(p, params)
+      case Some(p) =>
+        TableVersions.sync(spark)
+        runPrepared(p, params)
     }
 
-  /** Prepared DML executes eagerly inside spark.sql — a mutation outside
-    * PlanCache.sql, so it must invalidate explicitly (the PlanCache
-    * contract; same rule as COPY FROM / RowDml).
-    */
-  private def runPrepared(p: Prepared, params: Map[String, Any]) = {
-    val df = if (params.isEmpty) spark.sql(p.sql) else spark.sql(p.sql, params)
-    if (p.isCommand) PlanCache.invalidate(spark)
-    df
-  }
+  /** Prepared commands take the `/sql` path ([[Statement.runSql]]). */
+  private def runPrepared(p: Prepared, params: Map[String, Any]) =
+    if (p.isCommand) Statement.runSql(spark, p.sql, Statement.writeTarget(spark, p.sql), params)
+    else if (params.isEmpty) spark.sql(p.sql)
+    else spark.sql(p.sql, params)
 
   def lookupPrepared(handle: String): Option[Prepared] = Option(prepared.get(handle))
   def closePrepared(handle: String): Boolean = prepared.remove(handle) != null

@@ -330,9 +330,7 @@ object Statement {
       global: GlobalSettings,
       sql: String): DataFrame = {
     // Route this session's reads through the current table manifest
-    // (cross-table commit visibility, [[ManifestCatalog]]): a one-getAttr
-    // version check per statement; re-registers views and invalidates the
-    // plan cache only when a commit actually moved the manifest. Tables the
+    // (cross-table commit visibility, [[ManifestCatalog]]). Tables the
     // session's own open transaction shadows are skipped — read-your-writes
     // outranks the committed view.
     ManifestCatalog.refresh(session.spark,
@@ -343,20 +341,7 @@ object Statement {
           scala.jdk.CollectionConverters.MapHasAsScala(t.staged).asScala.keys
             .map(TableNames.manifestName).toSet
         }).getOrElse(Set.empty))
-    // Log-catalog tables are appended continuously by the sink's writer,
-    // OUTSIDE the SQL path, so nothing else drops this session's cached
-    // file listing for them. Refresh before resolving — bounded to
-    // statements that name a log catalog, PLUS the case where `USE
-    // _graft_logs` made it the current database so a bare `SELECT * FROM
-    // logs` never mentions the catalog textually.
-    CatalogLogSink.activeCatalogs.foreach { c =>
-      if (sql.toLowerCase.contains(c) ||
-          CatalogLogSink.isLogCatalog(TableNames.currentDb(session.spark)))
-        CatalogLogSink.tablesOf(c).foreach { t =>
-          try session.spark.sql(s"REFRESH TABLE `$c`.`$t`")
-          catch { case scala.util.control.NonFatal(_) => }
-        }
-    }
+    TableVersions.sync(session.spark)
     // Statement-attempt query log (reference duckdb_statement.cpp:886-894):
     // natural INFO, suppressed below the session/global query_log_level.
     QueryLog.statementAttempt(session, sql)
@@ -381,7 +366,6 @@ object Statement {
           throw new SecurityException("ATTACH requires the admin role")
         val readOnly = mode == null || mode.equalsIgnoreCase("READ_ONLY")
         val n = sessions.attachments.attach(session.spark, name, path, readOnly)
-        PlanCache.invalidate(session.spark)
         oneRowResult(session.spark, "result",
           s"attached '$name' ($n tables${if (readOnly) "" else ", read-write"})")
 
@@ -393,7 +377,6 @@ object Statement {
             s"Cannot DETACH '$name' while catalog logging is active")
         if (!sessions.attachments.detach(session.spark, name))
           throw new IllegalArgumentException(s"no attachment named '$name'")
-        PlanCache.invalidate(session.spark)
         oneRowResult(session.spark, "result", s"detached '$name'")
 
       case ExportDbRe(path, fmt) =>
@@ -542,7 +525,6 @@ object Statement {
           .filter(t => !t.isTemporary && t.tableType != "VIEW")
         tables.foreach(t => session.spark.sql(
           s"ANALYZE TABLE `${t.name}` COMPUTE STATISTICS"))
-        PlanCache.invalidate(session.spark)
         oneRowResult(session.spark, "result",
           s"analyzed ${tables.length} tables (statistics recomputed)")
 
@@ -582,9 +564,6 @@ object Statement {
         CommitLock.withExclusiveWrite(session.spark, table) {
           df.write.insertInto(table)
         }
-        // Mutation outside PlanCache.sql: cached SELECT plans over this
-        // table would otherwise serve pre-COPY data in the same session.
-        PlanCache.invalidate(session.spark)
         val schema = StructType(Seq(StructField("Count",
           org.apache.spark.sql.types.LongType, nullable = false)))
         session.spark.createDataFrame(List(Row(n)).asJava, schema)
@@ -605,7 +584,6 @@ object Statement {
           f.delete(): Unit
         }
         rmTree(replacedDir)
-        PlanCache.invalidate(session.spark)
         create(sessions, session, global, s"CREATE TABLE $table $rest")
 
       case CreateOrReplaceTableRe(table, rest) =>
@@ -633,8 +611,6 @@ object Statement {
             throw e
           }
         }
-        // Cached plans may reference the dropped table's old files/schema.
-        PlanCache.invalidate(session.spark)
         oneRowResult(session.spark, "result", s"table $table replaced")
 
       case CreateTableRe(table, rest)
@@ -739,7 +715,6 @@ object Statement {
           case Left(err) => throw new IllegalArgumentException(err)
           case Right(_) =>
             session.activeTxn = None
-            PlanCache.invalidate(session.spark)
             oneRowResult(session.spark, "result",
               s"transaction $id committed (${applied.size} tables)")
         }
@@ -750,7 +725,6 @@ object Statement {
         val txn = sessions.transactions.lookup(id).get
         TxnDml.rollbackDiscard(session.spark, txn)
         session.activeTxn = None
-        PlanCache.invalidate(session.spark)
         sessions.transactions.rollback(id) match {
           case Left(err) => throw new IllegalArgumentException(err)
           case Right(_) =>
@@ -793,7 +767,7 @@ object Statement {
         // DuckDB column-level ALTER TABLE (DROP/RENAME/retype/ADD+DEFAULT):
         // Spark's v1 parquet catalog can't, so AlterTable rewrites the
         // table copy-on-write with a safe swap. A write like any other:
-        // read-only blocked, plan cache flushed.
+        // read-only blocked.
         if (session.isReadOnly)
           throw new SecurityException("read-only role cannot alter tables")
         // full guard, not just the read-only bit: the log/system-catalog
@@ -801,15 +775,13 @@ object Statement {
         // dispatched here without ever facing StatementGuard)
         guardOrThrow(session)(sql)
         CatalogAccess.enforce(session, session.spark, sql, sessions.attachments.names)
-        val res = AlterTable.execute(session.spark, sql)
-        PlanCache.invalidate(session.spark)
-        res
+        AlterTable.execute(session.spark, sql)
 
       case _ if graft.plans.OnConflictRewrite.matches(sql) =>
         // DuckDB upsert syntax desugars to MERGE (source aliased `excluded`
         // so excluded.col works verbatim) and re-dispatches through the
-        // row-DML path below — same guard, transaction, and plan-cache
-        // semantics as a hand-written MERGE.
+        // row-DML path below — same guard and transaction semantics as a
+        // hand-written MERGE.
         create(sessions, session, global,
           graft.plans.OnConflictRewrite.rewrite(sql, session.spark))
 
@@ -834,15 +806,13 @@ object Statement {
             graft.sources.RowDml.targetOf(session.spark, dmlCore)
               .foreach(sessions.attachments.assertWritableTarget(_,
                 TableNames.currentDb(session.spark)))
-            val res = session.activeTxn match {
+            session.activeTxn match {
               case Some(txnId) => graft.sources.RowDml.execute(session.spark, sql,
                 sink = TxnDml.stagedSink(sessions.transactions, txnId),
                 allowPartitionScope = false,
                 resolve = (_, n) => TxnDml.txnResolver(session.spark, sessions.transactions, txnId)(n))
               case None => graft.sources.RowDml.execute(session.spark, sql)
             }
-            PlanCache.invalidate(session.spark)
-            res
         }
 
       case _ if sql.trim.toUpperCase.startsWith("INSERT") &&
@@ -909,7 +879,6 @@ object Statement {
                 CommitLock.withExclusiveWrite(session.spark, table) {
                   pinned.write.mode("append").insertInto(table)
                 }
-                PlanCache.invalidate(session.spark)
                 ret
               case _ => throw new IllegalArgumentException(
                 "RETURNING is supported on INSERT INTO <table> [(cols)] " +
@@ -944,23 +913,6 @@ object Statement {
                   "only row-level UPDATE/DELETE/MERGE are transactional inside " +
                   "BEGIN ... COMMIT; COMMIT or ROLLBACK first")
             }
-            // Plain INSERT INTO <table> is a non-transactional write like
-            // COPY FROM: take the target's commit lock so it waits out any
-            // in-flight transaction fold on the table (and sheds a stale
-            // manifest shadow) instead of racing it or failing with
-            // "inserting into a view" during the publish window.
-            val insertTarget: Option[String] =
-              if (sql2.trim.regionMatches(true, 0, "INSERT", 0, 6))
-                session.spark.sessionState.sqlParser.parsePlan(sql2) match {
-                  case i: org.apache.spark.sql.catalyst.plans.logical.InsertIntoStatement =>
-                    i.table match {
-                      case r: org.apache.spark.sql.catalyst.analysis.UnresolvedRelation =>
-                        Some(r.multipartIdentifier.mkString("."))
-                      case _ => None
-                    }
-                  case _ => None
-                }
-              else None
             // Read-your-writes for staged tables: staged keys are canonical
             // (`db.t`, TableNames.canonical) and a statement inside a txn
             // remaps every spelling of a staged relation to the txn's
@@ -972,26 +924,51 @@ object Statement {
                 scala.jdk.CollectionConverters.MapHasAsScala(t.staged).asScala.keys
                   .map(n => n -> TxnDml.shadowName(n)).toMap
               }).getOrElse(Map.empty)
-            insertTarget match {
-              case Some(t) =>
-                sessions.attachments.assertWritableTarget(t,
-                  TableNames.currentDb(session.spark))
-                CommitLock.withExclusiveWrite(session.spark, t) {
-                  PlanCache.sql(session.spark, sql2)
-                }
-              case None if stagedShadows.nonEmpty =>
-                val parsed = session.spark.sessionState.sqlParser.parsePlan(sql2)
-                org.apache.spark.sql.GraftDatasetShim.ofRows(session.spark,
-                  TxnDml.remapStaged(parsed, stagedShadows,
-                    TableNames.currentDb(session.spark)))
-              case None =>
-                // Repeated pure statements reuse their analyzed plan; commands
-                // bypass and flush the cache (PlanCache's contract).
-                PlanCache.sql(session.spark, sql2)
+            if (stagedShadows.nonEmpty) {
+              val parsed = session.spark.sessionState.sqlParser.parsePlan(sql2)
+              org.apache.spark.sql.GraftDatasetShim.ofRows(session.spark,
+                TxnDml.remapStaged(parsed, stagedShadows,
+                  TableNames.currentDb(session.spark)))
+            } else {
+              val target = writeTarget(session.spark, sql2)
+              target.foreach(
+                sessions.attachments.assertWritableTarget(_, TableNames.currentDb(session.spark)))
+              runSql(session.spark, sql2, target)
             }
         }
     }
   }
+
+  /** The table a plain `INSERT INTO` or `TRUNCATE TABLE` writes, if `sql`
+    * is one.
+    */
+  private[engine] def writeTarget(spark: SparkSession, sql: String): Option[String] = {
+    import org.apache.spark.sql.catalyst.analysis.{UnresolvedRelation, UnresolvedTable}
+    import org.apache.spark.sql.catalyst.plans.logical.{InsertIntoStatement, TruncateTable}
+    val t = sql.trim
+    if (t.regionMatches(true, 0, "INSERT", 0, 6) || t.regionMatches(true, 0, "TRUNCATE", 0, 8))
+      spark.sessionState.sqlParser.parsePlan(sql) match {
+        case InsertIntoStatement(r: UnresolvedRelation, _, _, _, _, _, _) =>
+          Some(r.multipartIdentifier.mkString("."))
+        case TruncateTable(r: UnresolvedTable) => Some(r.multipartIdentifier.mkString("."))
+        case _ => None
+      }
+    else None
+  }
+
+  /** Run guarded Spark SQL through [[PlanCache.sql]] — the `/sql` path, also
+    * taken by prepared commands. A write to `target` ([[writeTarget]]) is
+    * non-transactional like COPY FROM: under the target's commit lock it
+    * waits out any in-flight transaction fold on the table (and sheds a
+    * stale manifest shadow) instead of racing it or failing with "inserting
+    * into a view" during the publish window.
+    */
+  private[engine] def runSql(spark: SparkSession, sql: String, target: Option[String],
+      args: Map[String, Any] = Map.empty): DataFrame =
+    target match {
+      case Some(t) => CommitLock.withExclusiveWrite(spark, t)(PlanCache.sql(spark, sql, args))
+      case None => PlanCache.sql(spark, sql, args)
+    }
 
   /** Execute an action with the reference's timeout + interrupt semantics
     * (`duckdb_statement.cpp:2046-2192`): the action runs on a worker thread

@@ -29,9 +29,6 @@ object Ingest {
 
   final case class IngestResult(table: String, rowsIngested: Long, created: Boolean)
 
-  def tableExists(spark: SparkSession, table: String): Boolean =
-    spark.catalog.tableExists(table)
-
   /** By-name column alignment: reorder/select the incoming columns to the
     * target schema; missing nullable columns become nulls, extra columns are
     * an error (mirrors INSERT ... BY NAME strictness on unknown columns).
@@ -61,32 +58,35 @@ object Ingest {
     if (temporary) {
       // Session-scoped, like the reference's temp.main tables.
       data.createOrReplaceTempView(table)
+      graft.engine.TableVersions.bump(Seq(table))
       return IngestResult(table, expected, created = true)
     }
 
-    val exists = tableExists(spark, table)
-    if (!exists) {
-      if (!createIfMissing)
-        throw new IllegalStateException(s"table $table does not exist and if_not_exist=FAIL")
-      val before = 0L
-      data.write.mode(SaveMode.ErrorIfExists).saveAsTable(table)
-      verifyCount(spark, table, before + expected)
-      IngestResult(table, expected, created = true)
-    } else ifExists match {
-      case IfExists.Fail =>
-        throw new IllegalStateException(s"table $table already exists and if_exists=FAIL")
-      case IfExists.Replace =>
-        spark.sql(s"DROP TABLE $table")
+    // A write like any INSERT: under the commit lock it cannot land inside
+    // a commit's publish-to-fold window, and the count check is exact.
+    graft.engine.CommitLock.withExclusiveWrite(spark, table) {
+      if (!spark.catalog.tableExists(table)) {
+        if (!createIfMissing)
+          throw new IllegalStateException(s"table $table does not exist and if_not_exist=FAIL")
         data.write.mode(SaveMode.ErrorIfExists).saveAsTable(table)
         verifyCount(spark, table, expected)
         IngestResult(table, expected, created = true)
-      case IfExists.Append | IfExists.Unspecified =>
-        val before = spark.table(table).count()
-        val aligned =
-          if (ifExists == IfExists.Append) alignByName(data, spark.table(table)) else data
-        aligned.write.mode(SaveMode.Append).saveAsTable(table)
-        verifyCount(spark, table, before + expected)
-        IngestResult(table, expected, created = false)
+      } else ifExists match {
+        case IfExists.Fail =>
+          throw new IllegalStateException(s"table $table already exists and if_exists=FAIL")
+        case IfExists.Replace =>
+          spark.sql(s"DROP TABLE $table")
+          data.write.mode(SaveMode.ErrorIfExists).saveAsTable(table)
+          verifyCount(spark, table, expected)
+          IngestResult(table, expected, created = true)
+        case IfExists.Append | IfExists.Unspecified =>
+          val before = spark.table(table).count()
+          val aligned =
+            if (ifExists == IfExists.Append) alignByName(data, spark.table(table)) else data
+          aligned.write.mode(SaveMode.Append).saveAsTable(table)
+          verifyCount(spark, table, before + expected)
+          IngestResult(table, expected, created = false)
+      }
     }
   }
 

@@ -302,9 +302,8 @@ object RowDml {
         .parquet(affectedLeaves.map(l => stage.resolve(l).toString): _*)
         .select(cols.map(col).toIndexedSeq: _*)
         .write.mode("overwrite").insertInto(name)
-      // the clone's insert refreshed ITS relation cache; drop the caller
-      // session's stale FileIndex too
-      spark.catalog.refreshTable(name)
+      // the clone's insert refreshed only ITS relation cache; the caller's
+      // drops the table when the commit lock closes (TableVersions)
     } else {
       spark.read.parquet(stage.toString)
         .select(cols.map(col).toIndexedSeq: _*)

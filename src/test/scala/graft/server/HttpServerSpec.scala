@@ -495,6 +495,41 @@ class HttpServerSpec extends AnyFunSuite {
     assert(new String(count.body(), StandardCharsets.UTF_8) == """[{"n":5}]""")
   }
 
+  private def login(): String =
+    tokenOf(post("/auth", "", "Authorization" -> basic("gizmosql_username", password)))
+  private def sqlAs(tok: String, s: String): String = {
+    val r = post("/sql", s, "Authorization" -> s"Bearer $tok", "Accept" -> "application/json")
+    assert(r.statusCode() == 200, s"$s -> ${r.statusCode()}")
+    new String(r.body(), StandardCharsets.UTF_8)
+  }
+
+  test("two bearer sessions: an INSERT in one is seen by the other's repeated /sql read") {
+    val (a, b) = (login(), login())
+    sqlAs(a, "DROP TABLE IF EXISTS wire_vis_ins")
+    sqlAs(a, "CREATE TABLE wire_vis_ins USING parquet AS SELECT * FROM VALUES (1, 10), (2, 20) AS t(k, v)")
+    val count = "SELECT count(*) AS n FROM wire_vis_ins"
+    assert(sqlAs(b, count) == """[{"n":2}]""" && sqlAs(b, count) == """[{"n":2}]""")
+    sqlAs(a, "INSERT INTO wire_vis_ins VALUES (3, 30)")
+    assert(sqlAs(b, count) == """[{"n":3}]""")
+  }
+
+  test("two bearer sessions: /execute after the other session's UPDATE returns the new value") {
+    val (a, b) = (login(), login())
+    sqlAs(a, "DROP TABLE IF EXISTS wire_vis_upd")
+    sqlAs(a, "CREATE TABLE wire_vis_upd USING parquet AS SELECT * FROM VALUES (1, 10), (2, 20) AS t(k, v)")
+    val prep = post("/prepare", "SELECT sum(v) AS s FROM wire_vis_upd", "Authorization" -> s"Bearer $b")
+    assert(prep.statusCode() == 200)
+    val handle = new String(prep.body(), StandardCharsets.UTF_8)
+      .split("\"handle\":\"")(1).split("\"")(0)
+    def execute(): HttpResponse[Array[Byte]] = post("/execute", "", "Authorization" -> s"Bearer $b",
+      "X-Graft-Handle" -> handle, "Accept" -> "application/json")
+    assert(new String(execute().body(), StandardCharsets.UTF_8) == """[{"s":30}]""")
+    sqlAs(a, "UPDATE wire_vis_upd SET v = v + 1")
+    val after = execute()
+    assert(after.statusCode() == 200, new String(after.body(), StandardCharsets.UTF_8))
+    assert(new String(after.body(), StandardCharsets.UTF_8) == """[{"s":32}]""")
+  }
+
   test("close ends the session") {
     val resp = post("/close", "", "Authorization" -> s"Bearer $token")
     assert(resp.statusCode() == 200)
